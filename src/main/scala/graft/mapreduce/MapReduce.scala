@@ -1,28 +1,46 @@
 package graft.mapreduce
 
+import java.nio.charset.StandardCharsets
+
 import scala.reflect.ClassTag
 
-import org.apache.spark.Partitioner
-import org.apache.spark.rdd.RDD
+import org.apache.spark.{Partitioner, SparkContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.{KryoSerializer, Serializer}
 
 import graft.functions.Djb2
 
-/** Spark-first re-expression of the reference MapReduce API
-  * (/root/reference/mapreduce.h: `MR_Run` / `MR_Emit` / `MR_Partitioner` /
+/** Spark-first re-expression of the reference MapReduce API (the C
+  * library's mapreduce.h: `MR_Run` / `MR_Emit` / `MR_Partitioner` /
   * `MR_GetNext`).
   *
   * Semantic mapping:
   *  - map phase (one threadpool job per input split, mapreduce.c:176-180)
-  *    → `RDD.flatMap`: one task per partition, cluster-wide.
+  *    → `RDD.flatMap`: one task per partition, cluster-wide. MAP WIDTH:
+  *    an input with fewer partitions than `defaultParallelism` (a small
+  *    file is one split) is repartitioned to `defaultParallelism` first,
+  *    the rule `Tables.parallelize` applies to DataFrames; an input that
+  *    already has that many splits is left untouched, so at scale this
+  *    costs nothing.
   *  - `MR_Emit` into a mutex-guarded per-partition list (mapreduce.c:203)
-  *    → the shuffle write; the djb2 partitioner (mapreduce.c:239) is
-  *    preserved bit-for-bit via [[graft.functions.Djb2]].
+  *    → the shuffle write, after the `MR_Emit` drop rule (see [[emit]]);
+  *    the djb2 partitioner (mapreduce.c:239) is preserved bit-for-bit via
+  *    [[graft.functions.Djb2]].
   *  - reduce phase: per-key jobs draining `MR_GetNext` (mapreduce.c:183-191)
-  *    → sort-based grouping (`repartitionAndSortWithinPartitions` +
-  *    streaming run-detection), so a key's values are an iterator, never a
-  *    materialized in-memory list — the property that lets a 100 TB reduce
-  *    spill instead of OOM. The reference materializes all pairs in RAM;
-  *    we intentionally do not.
+  *    → sort-based grouping (a key-ordered shuffle + streaming
+  *    run-detection). The shuffle sort spills, so no partition has to fit
+  *    in memory, and keys reach the reducer one run at a time; only the
+  *    current key's run is buffered (the SKEW CONTRACT on
+  *    [[GroupedRunIterator]]). The reference materializes all pairs in
+  *    RAM; we intentionally do not.
+  *
+  * The order of values within one key is unspecified in [[run]]: it
+  * depends on which map task emitted them and on shuffle fetch order.
+  * [[runSorted]] is the ordered path.
+  *
+  * SERIALIZER: every facade shuffle is encoded with Kryo (see
+  * [[shuffleSerializer]]), set per shuffle rather than session-wide so
+  * that no other RDD path in the engine changes encoding.
   *
   * This facade is the compatibility surface for reference users. New code
   * should express the same jobs declaratively (see
@@ -32,51 +50,55 @@ import graft.functions.Djb2
   */
 object MapReduce {
 
-  /** djb2-based partitioner, bit-compatible with `MR_Partitioner`. */
-  final class Djb2Partitioner(val numParts: Int) extends Partitioner {
+  /** djb2-based partitioner, bit-compatible with `MR_Partitioner`. Equal
+    * for equal `numParts`, so Spark skips the shuffle of a later
+    * `reduceByKey`/`join` on an RDD already laid out by it. */
+  final case class Djb2Partitioner(numParts: Int) extends Partitioner {
     override def numPartitions: Int = numParts
     override def getPartition(key: Any): Int =
       if (key == null) 0
-      else Djb2.partition(key.toString.getBytes("UTF-8"), numParts)
+      else Djb2.partition(key.toString.getBytes(StandardCharsets.UTF_8), numParts)
+  }
+
+  /** [[runSorted]]'s partitioner: djb2 on the primary key of a composite
+    * `(K, S)` key, so a key's whole run lands in one partition whatever
+    * its secondary values — the same layout [[Djb2Partitioner]] gives `K`. */
+  final case class Djb2PrimaryKeyPartitioner(numParts: Int) extends Partitioner {
+    private val primary = Djb2Partitioner(numParts)
+    override def numPartitions: Int = numParts
+    override def getPartition(key: Any): Int =
+      primary.getPartition(key.asInstanceOf[Product2[Any, Any]]._1)
   }
 
   /** MR_Run: map `input` with `mapper` (emitting KV pairs), hash-partition
     * by key into `numParts` djb2 partitions, group each partition's pairs
-    * by key, and fold each key's values with `reducer`.
-    *
-    * NULL keys, empty-string keys, AND null values are all dropped,
-    * matching `MR_Emit` exactly (mapreduce.c:205: `key == NULL ||
-    * value == NULL || strlen(key) == 0`).
+    * by key, and fold each key's values with `reducer`. The order of a
+    * key's values is unspecified; use [[runSorted]] when it matters.
     */
   def run[T, K: ClassTag: Ordering, V: ClassTag, O: ClassTag](
       input: RDD[T],
       mapper: T => IterableOnce[(K, V)],
       reducer: (K, Iterator[V]) => O,
-      numParts: Int): RDD[O] = {
-    val emitted = input
-      .flatMap(mapper)
-      .filter { case (k, v) => k != null && k != "" && v != null }
-    emitted
-      .repartitionAndSortWithinPartitions(new Djb2Partitioner(numParts))
+      numParts: Int): RDD[O] =
+    sortedShuffle(emit(input, mapper, identity[V]), Djb2Partitioner(numParts))
       .mapPartitions { pairs =>
         new GroupedRunIterator(pairs).map { case (k, vs) => reducer(k, vs) }
       }
-  }
 
   /** MR_Run with a combiner — the optimization the reference lacks: `merge`
     * runs map-side per partition before the shuffle, so only one value per
     * (partition, key) crosses the network instead of every emitted pair.
     * This is what makes wordcount at 100 TB shuffle the vocabulary, not
-    * the corpus. Requires an associative, commutative `merge`. */
+    * the corpus. Requires an associative, commutative `merge`. The result
+    * is laid out by `Djb2Partitioner(numParts)`. */
   def runCombined[T, K: ClassTag: Ordering, V: ClassTag](
       input: RDD[T],
       mapper: T => IterableOnce[(K, V)],
       merge: (V, V) => V,
       numParts: Int): RDD[(K, V)] =
-    input
-      .flatMap(mapper)
-      .filter { case (k, v) => k != null && k != "" && v != null }
-      .reduceByKey(new Djb2Partitioner(numParts), merge)
+    emit(input, mapper, identity[V]).combineByKeyWithClassTag[V](
+      (v: V) => v, merge, merge, Djb2Partitioner(numParts),
+      mapSideCombine = true, serializer = shuffleSerializer(input.sparkContext))
 
   /** MR_Run with secondary sort: within each key, `reducer` sees values
     * ordered by `secondary` — the classic MapReduce pattern for
@@ -87,23 +109,46 @@ object MapReduce {
       mapper: T => IterableOnce[(K, (S, V))],
       reducer: (K, Iterator[V]) => O,
       numParts: Int): RDD[O] = {
-    val emitted = input
-      .flatMap(mapper)
-      .filter { case (k, sv) => k != null && k != "" && sv != null && sv._2 != null }
+    val composite = emit(input, mapper, (sv: (S, V)) => sv._2)
       .map { case (k, (s, v)) => ((k, s), v) }
-    val partitioner = new Partitioner {
-      private val inner = new Djb2Partitioner(numParts)
-      override def numPartitions: Int = numParts
-      override def getPartition(key: Any): Int =
-        inner.getPartition(key.asInstanceOf[(K, S)]._1)
-    }
-    emitted
-      .repartitionAndSortWithinPartitions(partitioner)
+    sortedShuffle(composite, Djb2PrimaryKeyPartitioner(numParts))
       .mapPartitions { pairs =>
         val byKey = pairs.map { case ((k, _), v) => (k, v) }
         new GroupedRunIterator(byKey).map { case (k, vs) => reducer(k, vs) }
       }
   }
+
+  /** The map side all three paths share: widen `input` to
+    * `defaultParallelism` splits when it has fewer (the MAP WIDTH rule in
+    * the header), run `mapper`, and apply `MR_Emit`'s drop rule — NULL
+    * keys, empty-string keys and null values never reach the shuffle
+    * (mapreduce.c:205: `key == NULL || value == NULL || strlen(key) == 0`).
+    * `payload` picks the part of an emitted value that the null check
+    * sees: [[runSorted]]'s value carries its secondary key beside it. */
+  private def emit[T, K, V](
+      input: RDD[T],
+      mapper: T => IterableOnce[(K, V)],
+      payload: V => Any): RDD[(K, V)] = {
+    val width = input.sparkContext.defaultParallelism
+    val splits = if (input.getNumPartitions < width) input.repartition(width) else input
+    splits
+      .flatMap(mapper)
+      .filter { case (k, v) => k != null && k != "" && v != null && payload(v) != null }
+  }
+
+  /** A key-ordered shuffle of `pairs` into `part`: the grouping shuffle of
+    * [[run]] and [[runSorted]]. */
+  private def sortedShuffle[K: ClassTag: Ordering, V: ClassTag](
+      pairs: RDD[(K, V)], part: Partitioner): RDD[(K, V)] =
+    new ShuffledRDD[K, V, V](pairs, part)
+      .setKeyOrdering(implicitly[Ordering[K]])
+      .setSerializer(shuffleSerializer(pairs.sparkContext))
+
+  /** Kryo for every facade shuffle. Spark picks Kryo on its own only when
+    * key and value are primitives or strings, so runSorted's composite
+    * key, and any tuple or case-class value, would otherwise be written
+    * with Java serialization. */
+  private def shuffleSerializer(sc: SparkContext): Serializer = new KryoSerializer(sc.getConf)
 
   /** Streams (key, values-iterator) runs out of a key-sorted iterator —
     * the reduce-side merge of classic MapReduce.

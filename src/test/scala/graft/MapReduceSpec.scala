@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.serializer.KryoSerializer
 import org.apache.spark.sql.functions._
 
 import graft.functions.Djb2
@@ -17,6 +22,28 @@ class MapReduceSpec extends SparkSpec {
     val p = Djb2.partition(longKey, 10)
     assert(p >= 0 && p < 10)
     assert(p == java.lang.Long.remainderUnsigned(Djb2.hash(longKey), 10L).toInt)
+    // known answers computed with C semantics: chars promote as SIGNED
+    // (é is 0xC3 0xA9, folded as -61, -87; unsigned chars give another value)
+    assert(Djb2.hash("é".getBytes(UTF_8)) == 5857809L)
+    assert(Djb2.hash("spark".getBytes(UTF_8)) == 210728065094L)
+    assert(Djb2.partition("spark".getBytes(UTF_8), 7) == 1)
+    // the long key sets the sign bit: C's unsigned modulo gives 2 where
+    // Java's signed % would give -4
+    assert(java.lang.Long.toUnsignedString(Djb2.hash(longKey)) == "17876224124281019352")
+    assert(p == 2)
+    assert(Djb2.hash(longKey) % 10 == -4L)
+  }
+
+  test("distwc tokenization: split on space/tab/newline/CR, empties dropped") {
+    import spark.implicits._
+    val line = " a\t\tb\r\nc  "
+    // the facade mappers' form and the declarative queries' form
+    assert(line.split("[ \t\n\r]+").iterator.filter(_.nonEmpty).toList == List("a", "b", "c"))
+    val viaSql = Seq(line).toDF("text")
+      .select(explode(split(col("text"), "[ \t\n\r]+")).as("token"))
+      .filter(col("token") =!= "")
+      .as[String].collect().toList
+    assert(viaSql == List("a", "b", "c"))
   }
 
   test("partitioner hash stops at the first NUL byte like C's while((c=*key++))") {
@@ -187,13 +214,13 @@ class MapReduceSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("combiner MEASURABLY shrinks the shuffle: runCombined moves fewer bytes than run") {
+  /** Shuffle bytes written by the jobs `body` runs. Bytes are attributed
+    * through a job group -> stage-id filter, so concurrent jobs on the
+    * shared SparkContext (parallel suites, background streams) can never
+    * bleed their shuffle writes into the window. */
+  private def shuffleBytesWritten(body: => Unit): Long = {
     import java.util.concurrent.atomic.LongAdder
-    // bytes are attributed through a job group -> stage-id filter, so
-    // concurrent jobs on the shared SparkContext (parallel suites,
-    // background streams) can never bleed their shuffle writes into
-    // this test's window (ADVICE r5)
-    val groupId = s"graft-combiner-measure-${System.nanoTime()}"
+    val groupId = s"graft-shuffle-measure-${System.nanoTime()}"
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val written = new LongAdder
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -208,35 +235,151 @@ class MapReduceSpec extends SparkSpec {
       }
     }
     val sc = spark.sparkContext
+    def flush(): Unit =
+      try org.apache.spark.graft.ListenerFlush.waitUntilEmpty(sc)
+      catch { case _: Throwable => () }
+    flush()
     sc.addSparkListener(listener)
-    sc.setJobGroup(groupId, "combiner shuffle measurement")
+    sc.setJobGroup(groupId, "shuffle byte measurement")
     try {
-      val lines = Tables.documents(spark, sf).select("text").rdd.map(_.getString(0))
-      def tokens(l: String) = l.split("[ \t\n\r]+").iterator.filter(_.nonEmpty).map(_ -> 1L)
-      def measure(body: => Unit): Long = {
-        try org.apache.spark.graft.ListenerFlush.waitUntilEmpty(sc)
-        catch { case _: Throwable => () }
-        val before = written.sum
-        body
-        try org.apache.spark.graft.ListenerFlush.waitUntilEmpty(sc)
-        catch { case _: Throwable => () }
-        written.sum - before
-      }
-      val plain = measure {
-        MapReduce.run[String, String, Long, (String, Long)](
-          lines, tokens, (k, vs) => k -> vs.sum, numParts = 10).count(); ()
-      }
-      val combined = measure {
-        MapReduce.runCombined[String, String, Long](
-          lines, tokens, _ + _, numParts = 10).count(); ()
-      }
-      // corpus >> vocabulary: the combiner must cut shuffle volume hard
-      assert(plain > 0 && combined > 0, s"both paths must shuffle: $plain / $combined")
-      assert(combined * 2 < plain,
-        s"combiner should at least halve shuffle bytes: $combined vs $plain")
+      body
+      flush()
+      written.sum
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
   }
+
+  private def documentLines = Tables.documents(spark, sf).select("text").rdd.map(_.getString(0))
+
+  /** (run bytes, runCombined bytes) of a word count over `lines`. */
+  private def wordcountShuffleBytes(lines: RDD[String]): (Long, Long) = {
+    import MapReduceSpec.tokenPairs
+    val plain = shuffleBytesWritten {
+      MapReduce.run[String, String, Long, (String, Long)](
+        lines, tokenPairs, (k, vs) => k -> vs.sum, numParts = 10).count(); ()
+    }
+    val combined = shuffleBytesWritten {
+      MapReduce.runCombined[String, String, Long](
+        lines, tokenPairs, _ + _, numParts = 10).count(); ()
+    }
+    assert(plain > 0 && combined > 0, s"both paths must shuffle: $plain / $combined")
+    (plain, combined)
+  }
+
+  test("combiner MEASURABLY shrinks the shuffle: runCombined moves fewer bytes than run") {
+    // the input already has defaultParallelism splits and sits in the
+    // cache, so the map phase is not widened and the window measures the
+    // pair shuffle alone
+    val lines = documentLines.repartition(spark.sparkContext.defaultParallelism).persist()
+    try {
+      lines.count()
+      val (plain, combined) = wordcountShuffleBytes(lines)
+      // corpus >> vocabulary: the combiner must cut shuffle volume hard
+      assert(combined * 2 < plain,
+        s"combiner should at least halve shuffle bytes: $combined vs $plain")
+    } finally lines.unpersist()
+  }
+
+  test("combiner shrinks total shuffle bytes on a 1-split input (widening spread included)") {
+    // both paths pay the same text spread; the pair shuffle still decides
+    val lines = documentLines.coalesce(1)
+    assert(lines.getNumPartitions == 1)
+    val (plain, combined) = wordcountShuffleBytes(lines)
+    assert(combined < plain, s"combiner should shrink total shuffle bytes: $combined vs $plain")
+  }
+
+  /** Ids of every shuffle in `rdd`'s lineage. */
+  private def shuffleIds(rdd: RDD[_]): Set[Int] =
+    rdd.dependencies.flatMap {
+      case s: ShuffleDependency[_, _, _] => shuffleIds(s.rdd) + s.shuffleId
+      case d => shuffleIds(d.rdd)
+    }.toSet
+
+  /** The three facade paths, each reducing to an order-free comparable form
+    * (run sums, runCombined merges, runSorted lists values in secondary order). */
+  private def facadePaths(input: RDD[Int]): Seq[(String, RDD[(String, String)])] = Seq(
+    "run" -> MapReduce.run[Int, String, Long, (String, String)](
+      input, i => Iterator.single((s"k${i % 97}", i.toLong)),
+      (k, vs) => (k, vs.sum.toString), numParts = 5),
+    "runCombined" -> MapReduce.runCombined[Int, String, Long](
+      input, i => Iterator.single((s"k${i % 97}", i.toLong)), _ + _, numParts = 5)
+      .mapValues(_.toString),
+    "runSorted" -> MapReduce.runSorted[Int, String, Int, Int, (String, String)](
+      input, i => Iterator.single((s"k${i % 97}", (-i, i))),
+      (k, vs) => (k, vs.mkString(",")), numParts = 5))
+
+  test("map phase: inputs below defaultParallelism gain exactly one spread shuffle") {
+    val sc = spark.sparkContext
+    val width = sc.defaultParallelism
+    Seq(1 -> 1, width - 1 -> 1, width -> 0, width + 3 -> 0).foreach { case (splits, extra) =>
+      facadePaths(sc.parallelize(1 to 1000, splits)).foreach { case (name, out) =>
+        assert(shuffleIds(out).size == 1 + extra, s"$name on $splits splits")
+      }
+    }
+    // the widened map side runs defaultParallelism tasks, and the grouping
+    // shuffle is Kryo-encoded
+    facadePaths(sc.parallelize(1 to 1000, 1)).foreach { case (name, out) =>
+      // every path ends in one narrow step over its grouping shuffle
+      val grouping = out.dependencies.head.rdd.dependencies.head.asInstanceOf[ShuffleDependency[_, _, _]]
+      assert(grouping.rdd.getNumPartitions == width, name)
+      assert(grouping.serializer.isInstanceOf[KryoSerializer], name)
+    }
+  }
+
+  test("run, runCombined and runSorted give identical results on 1 and 16 splits") {
+    val sc = spark.sparkContext
+    val narrow = facadePaths(sc.parallelize(1 to 20000, 1))
+    val wide = facadePaths(sc.parallelize(1 to 20000, 16))
+    narrow.zip(wide).foreach { case ((name, a), (_, b)) =>
+      val got = a.collect().toMap
+      assert(got.size == 97, name)
+      assert(got == b.collect().toMap, name)
+    }
+    // runSorted's values arrive in secondary (-i) order: descending i
+    assert(narrow.last._2.collect().toMap.apply("k1").split(',').map(_.toInt).toSeq
+      == (1 to 20000).filter(_ % 97 == 1).reverse)
+  }
+
+  test("Kryo round-trips case-class, Option, Array and nested-tuple values through run and runSorted") {
+    type Value = (MrPayload, Option[String], Array[Int], ((Int, String), Long))
+    def value(i: Int): Value =
+      (MrPayload(s"p$i", if (i % 3 == 0) None else Some(i.toLong)),
+        if (i % 2 == 0) Some(s"o$i") else None, Array(i, -i), ((i, s"t$i"), i * 7L))
+    def render(v: Value): String = v match {
+      case (p, o, a, ((i, t), l)) => s"$p|$o|${a.mkString(":")}|$i|$t|$l"
+    }
+    val input = spark.sparkContext.parallelize(1 to 300, 1)
+    val expected = (1 to 300).groupBy(i => s"k${i % 7}").map { case (k, is) => k -> is.sorted.map(i => render(value(i))) }
+    val viaRun = MapReduce.run[Int, String, Value, (String, Seq[String])](
+      input, i => Iterator.single((s"k${i % 7}", value(i))),
+      (k, vs) => (k, vs.map(render).toSeq.sorted), numParts = 3).collect().toMap
+    assert(viaRun == expected.map { case (k, vs) => k -> vs.sorted })
+    val viaSorted = MapReduce.runSorted[Int, String, (Int, String), Value, (String, Seq[String])](
+      input, i => Iterator.single((s"k${i % 7}", ((i, s"s$i"), value(i)))),
+      (k, vs) => (k, vs.map(render).toSeq), numParts = 3).collect().toMap
+    assert(viaSorted == expected)
+  }
+
+  test("runCombined output is laid out by an equal Djb2Partitioner: no re-shuffle") {
+    val input = spark.sparkContext.parallelize(1 to 1000, 4)
+    val counts = MapReduce.runCombined[Int, String, Long](
+      input, i => Iterator.single((s"k${i % 13}", 1L)), _ + _, numParts = 6)
+    val again = counts.reduceByKey(new MapReduce.Djb2Partitioner(6), _ + _)
+    assert(shuffleIds(again) == shuffleIds(counts))
+    assert(again.collect().toMap == counts.collect().toMap)
+    assert(MapReduce.Djb2PrimaryKeyPartitioner(6) == MapReduce.Djb2PrimaryKeyPartitioner(6))
+    assert(MapReduce.Djb2PrimaryKeyPartitioner(6) != MapReduce.Djb2Partitioner(6))
+    assert(MapReduce.Djb2Partitioner(6) != MapReduce.Djb2Partitioner(7))
+  }
 }
+
+object MapReduceSpec {
+  /** distwc word-count mapper; outside the suite so closures never capture it. */
+  def tokenPairs(l: String): Iterator[(String, Long)] =
+    l.split("[ \t\n\r]+").iterator.filter(_.nonEmpty).map(_ -> 1L)
+}
+
+/** A case-class facade value; top level, so Kryo sees no outer instance. */
+final case class MrPayload(name: String, tag: Option[Long])

@@ -21,6 +21,7 @@ class ReferenceParitySpec extends SparkSpec {
 
   test("compiled reference binary: identical wordcount and partition layout") {
     assume(gccAvailable, "gcc not available in this environment")
+    assume(Files.exists(Paths.get("/root/reference/distwc.c")), "C reference sources not present")
     val tmp = Files.createTempDirectory("refparity")
     val bin = tmp.resolve("distwc").toString
     val compile = Process(Seq("sh", "-c",
