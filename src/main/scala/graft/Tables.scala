@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
@@ -15,7 +16,14 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with the schema read on the driver, no Spark job (see [[GraftFooterSchema]]). */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    GraftFooterSchema.infer(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
 
   /** Small scans (one parquet file = one split) serialize compute-heavy
     * per-row stages on a single core; spread them when the scan has fewer

@@ -100,7 +100,13 @@ private[graft] object Shared {
       "|" + d + "|" + name
 
   /** Build-once/reuse-after memo: the first caller materializes `build`
-    * as one parquet file under the scratch root, later callers read it.
+    * as one parquet file under the scratch root, later callers read it
+    * (footer schema read on the driver, [[graft.Tables.readParquet]]).
+    * One file is right only for tables that are tiny by construction
+    * (verified pair lists, label tables, merge lists): the coalesce(1)
+    * write is one single-task job. A corpus-proportional table must not
+    * come through here — write it straight into a [[memoDir]] instead,
+    * as the sessionize drain does.
     *
     * REENTRANT by design (r10): `build` runs OUTSIDE the map update —
     * memos nest here (dup_clusters builds over the ngram_jaccard memo,
@@ -121,18 +127,20 @@ private[graft] object Shared {
       build.coalesce(1).write.mode("overwrite").parquet(out)
       out
     }
-    s.read.parquet(path)
+    graft.Tables.readParquet(s, path)
   }
 
   /** Directory-valued memo for deterministic derived LAYOUTS (the
-    * streaming family's mtime-pinned micro-batch input dirs): `build`
-    * populates a fresh directory once per (session, dir, name); later
-    * callers get the same path. The layouts are pure functions of the
-    * input tables, so reuse changes nothing but the preparation cost —
-    * the same argument as [[memo]], for file trees instead of one
-    * table. Never memoize anything stateful through this (streaming
-    * CHECKPOINTS are per-run state, not derived input — a reused
-    * checkpoint would resume instead of replay). */
+    * streaming family's mtime-pinned micro-batch input dirs) and for
+    * derived tables a sink writes directly (the sessionize drain's
+    * part files): `build` populates a fresh directory once per
+    * (session, dir, name); later callers get the same path. The
+    * contents are pure functions of the input tables, so reuse changes
+    * nothing but the preparation cost — the same argument as [[memo]],
+    * for file trees instead of one table. Never memoize anything
+    * stateful through this (streaming CHECKPOINTS are per-run state,
+    * not derived input — a reused checkpoint would resume instead of
+    * replay). */
   def memoDir(s: SparkSession, d: String, name: String)(build: java.io.File => Unit): java.io.File = {
     // same reentrancy + per-key-serialization discipline as [[memo]]
     val path = runOrJoin(keyOf(s, d, "dir:" + name)) { () =>

@@ -198,11 +198,15 @@ object EventStream {
     val out = java.nio.file.Files.createTempDirectory(s"graft-gate-$name-")
       .resolve("t").toString
     runToFileSink(s, d, df, mode, out)
-    if (new java.io.File(out).exists &&
-        new java.io.File(out).list().exists(_.endsWith(".parquet")))
-      s.read.parquet(out)
-    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
+    readDrained(s, out, df.schema)
   }
+
+  /** Read back a file-sink drain: the part files under `out`, or an
+    * empty frame with `schema` when no batch wrote any. */
+  private def readDrained(s: SparkSession, out: String, schema: => StructType): DataFrame =
+    if (Option(new java.io.File(out).list()).exists(_.exists(_.endsWith(".parquet"))))
+      Tables.readParquet(s, out)
+    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** File-sink drain — since r13 the GATE path, not probe-only (the
     * r12 1000× lesson): a memory sink holds the COMPLETE result table
@@ -220,16 +224,20 @@ object EventStream {
   private[graft] def runToFileSink(s: SparkSession, d: String, df: DataFrame,
       mode: String, out: String): Unit =
     withStreamShuffle(s, d) {
-      val q = df.writeStream
-        .outputMode(mode)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-fsink-ckpt-").toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.write.mode(if (mode == "complete") "overwrite" else "append").parquet(out)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      // the drain never resumes, so its checkpoint (offsets, commits,
+      // state-store files) is deleted once the query has stopped
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-fsink-ckpt-").toString
+      try {
+        val q = df.writeStream
+          .outputMode(mode)
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            batch.write.mode(if (mode == "complete") "overwrite" else "append").parquet(out)
+          }
+          .start()
+        try q.processAllAvailable()
+        finally q.stop()
+      } finally graft.Scratch.rmTree(ckpt)
     }
 
   /** Tumbling 5-minute window counts/sums per event type via a real
@@ -394,20 +402,26 @@ object EventStream {
     // r14: TWO declared queries (st_sessionize_stream = the gap-closed
     // slice, st_sessionize_final = the timeout slice) drain this same
     // FSM stream and then filter disjoint halves of it — the shared
-    // derived table pattern (Shared.memo contract: session-scoped,
+    // derived table pattern (Shared.memoDir contract: session-scoped,
     // keyed on applicationId, dies with the JVM). The first consumer
-    // pays the full drain; the second scans the drained session table
+    // pays the full drain, which writes its part files straight into
+    // the memo directory (the table grows with the corpus, so no
+    // single-file copy); the second scans the drained session table
     // instead of replaying the whole micro-batch pipeline. The drained
     // multiset is deterministic (single events file + the no-data
     // watermark batch, append mode accumulates every emitted session)
     // and both consumers re-apply their own ordering; each slice stays
     // oracle-gated per query.
-    graft.operators.Shared.memo(s, d, "st_sessionize_drained") {
-      runToMemorySink(s, d, sessionFsmStream(s, d), "graft_st_sessionize_stream", "append")
+    readDrained(s, sessionDrain(s, d).toString, sessionFsmStream(s, d).schema)
+
+  /** The memo directory holding the drained session table's part files. */
+  private[graft] def sessionDrain(s: SparkSession, d: String): java.io.File =
+    graft.operators.Shared.memoDir(s, d, "st_sessionize_drained") { dir =>
+      runToFileSink(s, d, sessionFsmStream(s, d), "append", dir.toString)
     }
 
   /** The flatMapGroupsWithState session FSM without a sink — shared by
-    * [[runSessionStream]] (memory sink) and the 1000× file-sink probe. */
+    * [[runSessionStream]] (the memo drain) and the 1000× file-sink probe. */
   private[graft] def sessionFsmStream(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val session = s

@@ -179,4 +179,45 @@ class SessionizeStreamSpec extends SparkSpec {
       || !spark.conf.get("spark.sql.streaming.stateStore.providerClass").contains("RocksDB"),
       "state-store provider conf leaked out of twsLedger")
   }
+
+  test("sessionize drain: the memo directory holds several part files and reads back the drained rows") {
+    // a fresh session is a fresh memo key; four stream shuffle partitions
+    // make the append drain write more than one part file
+    val s2 = spark.newSession()
+    s2.conf.set(GraftConf.streamShuffleKey, "4")
+    val dir = EventStream.sessionDrain(s2, sf)
+    val parts = dir.listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(parts.length > 1, s"expected several part files in $dir")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("user_id", "start_us", "end_us", "n_events", "total_value", "closed_by")
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val sink = "graft_drain_reference"
+    val q = EventStream.sessionFsmStream(s2, sf).writeStream
+      .outputMode("append").format("memory").queryName(sink).start()
+    try q.processAllAvailable() finally q.stop()
+    try {
+      val back = rows(Tables.readParquet(s2, dir.toString))
+      assert(back.nonEmpty && back == rows(s2.table(sink)))
+    } finally s2.catalog.dropTempView(sink)
+    // both consumers read the same drained directory
+    assert(EventStream.sessionDrain(s2, sf) == dir)
+    def slice(ss: org.apache.spark.sql.SparkSession) =
+      (EventStream.sessionizeStreamClosed(ss, sf).collect().toSeq,
+        EventStream.sessionizeStreamFinal(ss, sf).collect().toSeq)
+    assert(slice(s2) == slice(spark))
+  }
+
+  test("file-sink drain deletes its streaming checkpoint directory") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def ckpts() = Option(tmp.list()).map(_.filter(_.startsWith("graft-fsink-ckpt-")).toSet)
+      .getOrElse(Set.empty[String])
+    val before = ckpts()
+    val out = java.nio.file.Files.createTempDirectory("graft_fsink_out_").toString
+    try {
+      EventStream.runToFileSink(spark, sf, EventStream.eventStream(spark, sf).select("event_id"),
+        "append", s"$out/t")
+      assert(new java.io.File(s"$out/t").list().exists(_.endsWith(".parquet")))
+      assert((ckpts() -- before).isEmpty, s"leaked: ${ckpts() -- before}")
+    } finally Scratch.rmTree(out)
+  }
 }

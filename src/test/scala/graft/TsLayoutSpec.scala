@@ -40,6 +40,8 @@ class TsLayoutSpec extends SparkSpec {
       try {
         df.write.mode("overwrite").parquet(dir)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        // the footer-schema read agrees with Spark's inference on every layout
+        assert(Tables.readParquet(spark, dir).schema == spark.read.parquet(dir).schema)
         val back = Tables.normalizeTs(spark.read.parquet(dir))
         assert(back.schema("ts").dataType == TimestampType,
           s"normalizeTs must yield TIMESTAMP, got ${back.schema("ts").dataType}")
